@@ -19,6 +19,7 @@ Design for 100 TB:
 from __future__ import annotations
 
 import warnings
+import weakref
 
 import numpy as np
 import pandas as pd
@@ -288,7 +289,7 @@ def _shingle_sig_udf(num_hashes: int, shingle_n: int):
     through interpreted HOFs (``transform``/``slice``/``array_join``
     are CodegenFallback): measured 0.43 s of the 1.33 s query at sf0.1,
     entirely the per-shingle string allocation (the xxhash64 and
-    array_distinct on top were free — tools/probe_shingle_cost.py).
+    array_distinct on top were free).
     Here the kernel receives the NORMALIZED text (regex stays JVM-side,
     codegen, measured free) and, because tokens are space-joined,
     every word n-gram is a contiguous byte slice of it: token offsets
@@ -692,49 +693,26 @@ def _collapsed_rep_pairs(
     # (r12; guide §4.2): the JVM form — array_distinct(transform(
     # shingles_expr, xxhash64)) then the signature UDF — paid ~0.43 s
     # of interpreted per-shingle STRING construction per run
-    # (tools/probe_shingle_cost.py; transform/slice/array_join are
-    # CodegenFallback). The kernel consumes the codegen'd NORMALIZED
-    # text and emits bit-identical shingle sets and signatures (see
-    # _shingle_sig_udf). SPARK_GRAFT_SHINGLE_KERNEL=0 restores the
-    # JVM chain (differential-tested equal).
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_SHINGLE_KERNEL", "1") == "0":
-        with_sh = collapsed.withColumn(
-            "__s__",
-            memo_column(
-                ("hashed_shingles", text_col, shingle_n),
-                lambda: F.array_distinct(
-                    F.transform(
-                        shingles_expr(F.col(text_col), shingle_n),
-                        lambda sh: F.xxhash64(sh),
-                    )
-                ),
+    # (transform/slice/array_join are CodegenFallback). The kernel
+    # consumes the codegen'd NORMALIZED text and emits bit-identical
+    # shingle sets and signatures (see _shingle_sig_udf).
+    packed = collapsed.withColumn(
+        "__p__",
+        memo_column(
+            ("shingle_sig_pack", text_col, num_hashes, shingle_n),
+            lambda: _shingle_sig_udf(num_hashes, shingle_n)(
+                normalize_expr(F.col(text_col))
             ),
+        ),
+    )
+    groups = _cache_once(
+        packed.select(
+            "__rep__",
+            "__members__",
+            F.col("__p__")["minhash"].alias("minhash"),
+            F.col("__p__")["s"].alias("__s__"),
         )
-        groups = _cache_once(
-            minhash_signature(
-                with_sh, text_col, num_hashes, shingle_n, shingles_col="__s__"
-            ).select("__rep__", "__members__", "minhash", "__s__")
-        )
-    else:
-        packed = collapsed.withColumn(
-            "__p__",
-            memo_column(
-                ("shingle_sig_pack", text_col, num_hashes, shingle_n),
-                lambda: _shingle_sig_udf(num_hashes, shingle_n)(
-                    normalize_expr(F.col(text_col))
-                ),
-            ),
-        )
-        groups = _cache_once(
-            packed.select(
-                "__rep__",
-                "__members__",
-                F.col("__p__")["minhash"].alias("minhash"),
-                F.col("__p__")["s"].alias("__s__"),
-            )
-        )
+    )
     base = groups.select(F.col("__rep__").alias(id_col), "minhash", "__s__")
     cands = lsh_candidate_pairs(base, id_col, "minhash", bands, rows)
     rep_pairs = jaccard_verify(
@@ -979,7 +957,24 @@ def simhash_buckets(
     return DataFrame(out)
 
 
-_CACHE_REGISTRY: dict = {}
+# session -> {semantic hash: cached JVM Dataset}. Weakly keyed on the
+# session: an id() key could be reused by the next session allocated at
+# the same address, and a strong key kept every session's DataFrames
+# alive. The values are JVM handles, which hold no reference back to the
+# Python session, so a discarded session is collected and the finalizer
+# in _cache_once unpersists its entries: the CacheManager is shared by
+# every session of the context, so a plan left cached would serve the
+# next session's build of the same query.
+_CACHE_REGISTRY: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def _unpersist_all(entries: dict) -> None:
+    for jdf in entries.values():
+        try:
+            jdf.unpersist(False)
+        except Exception:
+            pass
+    entries.clear()
 
 
 def _cache_once(sdf: SparkDF) -> SparkDF:
@@ -997,15 +992,20 @@ def _cache_once(sdf: SparkDF) -> SparkDF:
     semantic plan: every invocation recomputes its intermediates from
     the inputs inside its own timed action, and the cache only
     amortizes the branches WITHIN that action."""
-    key = (id(sdf.sparkSession), sdf.semanticHash())
-    hit = _CACHE_REGISTRY.pop(key, None)
-    if hit is not None and hit.sameSemantics(sdf):
+    session = sdf.sparkSession
+    entries = _CACHE_REGISTRY.get(session)
+    if entries is None:
+        entries = _CACHE_REGISTRY[session] = {}
+        weakref.finalize(session, _unpersist_all, entries).atexit = False
+    key = sdf.semanticHash()
+    hit = entries.pop(key, None)
+    if hit is not None and hit.sameSemantics(sdf._jdf):
         try:
-            hit.unpersist()
+            hit.unpersist(False)
         except Exception:
             pass
     c = sdf.cache()
-    _CACHE_REGISTRY[key] = c
+    entries[key] = c._jdf
     return c
 
 

@@ -525,34 +525,6 @@ def _cells_expr(C: np.ndarray, nprobe: int, v: Column) -> Column:
     )
 
 
-def _cells_udf(C: np.ndarray, nprobe: int):
-    """Arrow-batched assignment: one (batch × dim) @ (dim × k) matmul
-    per batch, top-``nprobe`` cells by dot product (cells are unit-norm
-    so dot order == cosine order). Centroids ride inside the UDF
-    closure — k·dim doubles, broadcast once per executor."""
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    CT = C.T.copy()  # (dim, k)
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def _cells(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype=object)
-        # sliced like pair_cosine_col: bound each worker's numpy peak
-        # regardless of the Arrow batch size (vector columns make big
-        # batches expensive — see the 1000×-decade OOM note there)
-        parts = []
-        step = 8192
-        for lo in range(0, len(vs), step):
-            M = np.stack([np.asarray(v, dtype=np.float64) for v in vs.iloc[lo : lo + step]])
-            S = M @ CT  # (n, k)
-            top = np.argsort(-S, axis=1, kind="stable")[:, :nprobe].astype(np.int32)
-            parts.extend(list(top))
-        return pd.Series(parts)
-
-    return _cells
-
-
 def _bounded_hash_sample(c: SparkDF, id_col: str, vec_alias: str, sample_n: int) -> list:
     """Deterministic k-means training sample whose DRIVER RECEIPT is
     O(sample_n) at any corpus size.
@@ -1003,64 +975,18 @@ def pq_train(
     )
 
 
-def _pq_code_expr(codebooks: np.ndarray, v: Column) -> Column:
-    """JVM-side PQ encoding: per subspace, the argmin-L2 centroid index
-    as a Catalyst fold (array<int>, length m). Codebooks ride as ONE
-    nested literal per subspace (the IVF lesson: one tree node, not
-    k·dim scalars); ties break to the smaller index (np.argmin rule),
-    encoded as min over (dist, index) structs. Map-only — encoding a
-    100 TB corpus is a scan, not a shuffle."""
-    m, ksub, dsub = codebooks.shape
-
-    def _sub_code(cb, sub):
-        def body(c):
-            return F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        sub,
-                        F.element_at(cb, c + 1),
-                        lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("d"),
-                c.alias("i"),
-            )
-
-        pairs = F.transform(F.sequence(F.lit(0), F.lit(ksub - 1)), body)
-        return F.array_min(pairs)["i"].cast("int")
-
-    codes = [
-        _sub_code(
-            F.lit([[float(x) for x in row] for row in codebooks[j]]),
-            F.slice(v, j * dsub + 1, dsub),
-        )
-        for j in range(m)
-    ]
-    return F.array(*codes)
-
-
 def pq_encode(
     corpus: DataFrame,
     codebooks: np.ndarray,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     code_col: str = "pq_code",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Corpus vectors → length-m code arrays (keeps all other columns,
     drops the raw vector — the point is that downstream search carries
-    m ints, not dim floats). ``engine='arrow'`` (default) encodes with
-    the zero-copy mapInArrow kernel; ``'catalyst'`` keeps the pure-JVM
-    argmin fold (bit-identical codes, slower at corpus scale)."""
-    if engine == "arrow":
-        return DataFrame(
-            _pq_encode_arrow(corpus.spark, codebooks, vec_col, code_col)
-        )
-    out = corpus.spark.withColumn(
-        code_col, _pq_code_expr(codebooks, F.col(vec_col))
-    ).drop(vec_col)
-    return DataFrame(out)
+    m ints, not dim floats), encoded by the zero-copy mapInArrow kernel
+    ``_pq_encode_arrow``."""
+    return DataFrame(_pq_encode_arrow(corpus.spark, codebooks, vec_col, code_col))
 
 
 def pq_topk(
@@ -1072,87 +998,101 @@ def pq_topk(
     code_col: str = "pq_code",
     query_id_col: str = "query_id",
     vec_col: str = "embedding",
-    method: str = "arrow",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes.
 
-    ``method='arrow'`` (default): queries are collected to the driver
-    (bounded — the small side by contract, same receipt as a
-    broadcast), lookup tables are computed in numpy, and each corpus
-    partition scores its own codes with vectorized LUT gathers inside
-    ``mapInArrow`` — emitting only its PARTIAL top-k per query, exactly
-    the cosine-matmul shuffle shape (partitions × q × k narrow rows,
-    the corpus codes never shuffle). At the 10⁴× decade the JVM fold
-    below was the bottleneck: an interpreted `aggregate` per
-    (row, query) is ~1.6B fold steps over 20M codes × 5 queries.
+    Queries are collected to the driver (bounded — the small side by
+    contract, same receipt as a broadcast), lookup tables are computed
+    in numpy, and each corpus partition scores its own codes with
+    vectorized LUT gathers inside ``mapInArrow`` — emitting only its
+    PARTIAL top-k per query, exactly the cosine-matmul shuffle shape
+    (partitions × q × k narrow rows, the corpus codes never shuffle).
+    At the 10⁴× decade a JVM ``aggregate`` fold per (row, query) was
+    the bottleneck: ~1.6B interpreted fold steps over 20M codes × 5
+    queries.
 
-    ``method='catalyst'``: per-query LUTs as JVM transforms over the
-    codebook literals, broadcast-joined to the code table, two-level
-    top-k via spark_partition_id. Arrow-less fallback.
+    approx_dist is the standard PQ estimate of squared L2 distance,
+    summed in order like the JVM fold in ``tests/kernel_refs.py``
+    (bit-identical results). The searched index carries only (id, m
+    codes); compose with IVF cells for the full IVF-PQ index."""
+    import pyarrow as pa
 
-    approx_dist is the standard PQ estimate of squared L2 distance.
-    Either way the searched index carries only (id, m codes); compose
-    with IVF cells for the full IVF-PQ index."""
-    if method == "arrow":
-        return _pq_topk_arrow(
-            encoded, queries, codebooks, k, id_col, code_col, query_id_col, vec_col
-        )
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    spark = encoded.spark.sparkSession
     m, ksub, dsub = codebooks.shape
-    def _lut(cb, sub):
-        def body(cent):
-            return F.aggregate(
-                F.zip_with(
-                    sub,
-                    cent,
-                    lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
+    C = codebooks.astype(np.float64)
+    qrows = queries.spark.select(query_id_col, vec_col).collect()
+    part_schema = StructType(
+        [
+            StructField(query_id_col, queries.spark.schema[query_id_col].dataType),
+            StructField(id_col, encoded.spark.schema[id_col].dataType),
+            StructField("approx_dist", DoubleType()),
+        ]
+    )
+    c = encoded.spark.select(id_col, code_col)
+    if not qrows:
+        mapped = spark.createDataFrame([], part_schema)
+    else:
+        qids = [r[0] for r in qrows]
+        Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
+        nq = len(qids)
+        # LUT[q, j, c] = ||Q[q]_sub_j - C[j][c]||² accumulated dim-by-dim
+        # in order — numpy's pairwise .sum() differs from the JVM
+        # zip_with fold's sequential adds in the last ulp at dsub >= 8
+        LUT = np.zeros((nq, m, ksub))
+        for j in range(m):
+            S = Q[:, j * dsub : (j + 1) * dsub]
+            for t in range(dsub):
+                diff = S[:, t][:, None] - C[j][:, t][None, :]
+                LUT[:, j, :] += diff * diff
+        from pyspark.sql.pandas.types import to_arrow_type
 
-        return F.transform(cb, body)
+        qid_t = to_arrow_type(part_schema[0].dataType)
+        cid_t = to_arrow_type(part_schema[1].dataType)
 
-    luts = [
-        _lut(
-            F.lit([[float(x) for x in row] for row in codebooks[j]]),
-            F.slice(F.col("__qv__"), j * dsub + 1, dsub),
-        )
-        for j in range(m)
-    ]
-    q = queries.spark.select(
-        F.col(query_id_col), F.col(vec_col).alias("__qv__")
-    ).select(query_id_col, F.array(*luts).alias("__lut__"))
-    scored = (
-        encoded.spark.select(F.col(id_col), F.col(code_col).alias("__code__"))
-        .join(F.broadcast(q))
-        .select(
-            query_id_col,
-            id_col,
-            F.aggregate(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                F.lit(0.0),
-                lambda acc, j: acc
-                + F.element_at(
-                    F.element_at(F.col("__lut__"), j + 1),
-                    F.element_at(F.col("__code__"), j + 1) + 1,
-                ),
-            ).alias("approx_dist"),
-        )
-    )
-    part = scored.withColumn("__pid__", F.spark_partition_id())
-    w_local = W.partitionBy(query_id_col, "__pid__").orderBy(
-        F.col("approx_dist").asc(), F.col(id_col).asc()
-    )
-    survivors = (
-        part.withColumn("__rn__", F.row_number().over(w_local))
-        .filter(F.col("__rn__") <= k)
-        .drop("__rn__", "__pid__")
-    )
+        def gen(batches):
+            for b in batches:
+                ids = b.column(0)
+                codes_col = b.column(1)
+                n = len(ids)
+                if n == 0:
+                    continue
+                # (n, m) code matrix, zero-copy from the flat buffer
+                codes = _vec_matrix(codes_col).astype(np.int64, copy=False)
+                ids_np = ids.to_numpy(zero_copy_only=False)
+                kk = min(k, n)
+                best_q, best_i, best_d = [], [], []
+                for qi in range(nq):
+                    # sequential accumulation over subspaces — numpy's
+                    # pairwise .sum() kicks in at m>=8 and differs from
+                    # the JVM fold's in-order adds in the last ulp
+                    scores = np.zeros(n)
+                    for j in range(m):
+                        scores += LUT[qi][j][codes[:, j]]
+                    # (dist, id) lexicographic partial top-k — the same
+                    # tie rule the global rerank window applies, so a
+                    # tied survivor is never pruned differently here
+                    part = np.lexsort((ids_np, scores))[:kk]
+                    best_q.extend([qids[qi]] * kk)
+                    best_i.append(part)
+                    best_d.append(scores[part])
+                sel = np.concatenate(best_i)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(best_q, type=qid_t),
+                        pa.array(ids_np[sel], type=cid_t),
+                        pa.array(np.concatenate(best_d), type=pa.float64()),
+                    ],
+                    names=[query_id_col, id_col, "approx_dist"],
+                )
+
+        mapped = c.mapInArrow(gen, part_schema)
     w = W.partitionBy(query_id_col).orderBy(
         F.col("approx_dist").asc(), F.col(id_col).asc()
     )
     out = (
-        survivors.withColumn("__rn__", F.row_number().over(w))
+        mapped.withColumn("__rn__", F.row_number().over(w))
         .filter(F.col("__rn__") <= k)
         .select(query_id_col, id_col, "approx_dist", F.col("__rn__").alias("rank"))
     )
@@ -1217,10 +1157,10 @@ def _pq_encode_arrow(
     straight from the Arrow flat buffer (_vec_matrix — no per-cell
     Python lists, which dominated the pandas_udf form) and computes per
     8k slice one (n, ksub) distance matrix per subspace. Distances are
-    the same in-order (a-b)² sums as the Catalyst fold (dsub is below
-    numpy's pairwise-summation threshold), ties break to the smaller
-    index (np.argmin == the fold's struct-min rule), so codes are
-    bit-identical (unit-tested)."""
+    the same in-order (a-b)² sums as the JVM argmin fold in
+    ``tests/kernel_refs.py`` (dsub is below numpy's pairwise-summation
+    threshold), ties break to the smaller index (np.argmin == the
+    fold's struct-min rule), so codes are bit-identical to it."""
     import pyarrow as pa
 
     m, ksub, dsub = codebooks.shape
@@ -1393,99 +1333,5 @@ def ivfpq_topk(
         rerank.withColumn("__rn__", F.row_number().over(w))
         .filter(F.col("__rn__") <= k)
         .select(query_id_col, id_col, "cosine", F.col("__rn__").alias("rank"))
-    )
-    return DataFrame(out)
-
-
-def _pq_topk_arrow(
-    encoded: DataFrame,
-    queries: DataFrame,
-    codebooks: np.ndarray,
-    k: int,
-    id_col: str,
-    code_col: str,
-    query_id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    spark = encoded.spark.sparkSession
-    m, ksub, dsub = codebooks.shape
-    C = codebooks.astype(np.float64)
-    qrows = queries.spark.select(query_id_col, vec_col).collect()
-    part_schema = StructType(
-        [
-            StructField(query_id_col, queries.spark.schema[query_id_col].dataType),
-            StructField(id_col, encoded.spark.schema[id_col].dataType),
-            StructField("approx_dist", DoubleType()),
-        ]
-    )
-    c = encoded.spark.select(id_col, code_col)
-    if not qrows:
-        mapped = spark.createDataFrame([], part_schema)
-    else:
-        qids = [r[0] for r in qrows]
-        Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-        nq = len(qids)
-        # LUT[q, j, c] = ||Q[q]_sub_j - C[j][c]||² accumulated dim-by-dim
-        # in order — numpy's pairwise .sum() differs from the JVM
-        # zip_with fold's sequential adds in the last ulp at dsub >= 8
-        LUT = np.zeros((nq, m, ksub))
-        for j in range(m):
-            S = Q[:, j * dsub : (j + 1) * dsub]
-            for t in range(dsub):
-                diff = S[:, t][:, None] - C[j][:, t][None, :]
-                LUT[:, j, :] += diff * diff
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        qid_t = to_arrow_type(part_schema[0].dataType)
-        cid_t = to_arrow_type(part_schema[1].dataType)
-
-        def gen(batches):
-            for b in batches:
-                ids = b.column(0)
-                codes_col = b.column(1)
-                n = len(ids)
-                if n == 0:
-                    continue
-                # (n, m) code matrix, zero-copy from the flat buffer
-                codes = _vec_matrix(codes_col).astype(np.int64, copy=False)
-                ids_np = ids.to_numpy(zero_copy_only=False)
-                kk = min(k, n)
-                best_q, best_i, best_d = [], [], []
-                for qi in range(nq):
-                    # sequential accumulation over subspaces — numpy's
-                    # pairwise .sum() kicks in at m>=8 and differs from
-                    # the JVM fold's in-order adds in the last ulp
-                    scores = np.zeros(n)
-                    for j in range(m):
-                        scores += LUT[qi][j][codes[:, j]]
-                    # (dist, id) lexicographic partial top-k — the same
-                    # tie rule the global rerank window applies, so a
-                    # tied survivor is never pruned differently here
-                    part = np.lexsort((ids_np, scores))[:kk]
-                    best_q.extend([qids[qi]] * kk)
-                    best_i.append(part)
-                    best_d.append(scores[part])
-                sel = np.concatenate(best_i)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(best_q, type=qid_t),
-                        pa.array(ids_np[sel], type=cid_t),
-                        pa.array(np.concatenate(best_d), type=pa.float64()),
-                    ],
-                    names=[query_id_col, id_col, "approx_dist"],
-                )
-
-        mapped = c.mapInArrow(gen, part_schema)
-    w = W.partitionBy(query_id_col).orderBy(
-        F.col("approx_dist").asc(), F.col(id_col).asc()
-    )
-    out = (
-        mapped.withColumn("__rn__", F.row_number().over(w))
-        .filter(F.col("__rn__") <= k)
-        .select(query_id_col, id_col, "approx_dist", F.col("__rn__").alias("rank"))
     )
     return DataFrame(out)

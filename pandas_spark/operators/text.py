@@ -149,19 +149,6 @@ def shingles_expr(text: Column, n: int = 5) -> Column:
     ).otherwise(F.array(F.array_join(toks, " ")))
 
 
-def _hits_expr(toks: Column, words: Sequence[str]) -> Column:
-    """Stopword hit COUNT via an int-accumulator fold — unlike
-    ``size(filter(...))`` it allocates no intermediate array per row
-    (the filtered-array churn was the dominant GC load in the
-    giant-corpus regime)."""
-    sw = F.array(*[F.lit(w) for w in words])
-    return F.aggregate(
-        toks,
-        F.lit(0),
-        lambda acc, x: acc + F.when(F.array_contains(sw, x), 1).otherwise(0),
-    )
-
-
 _ASCII_ALPHA = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"
 _JAVA_WS = " \t\n\x0b\x0c\r"  # exactly the java regex \s class
 
@@ -967,74 +954,6 @@ def tfidf_top_terms(
 # repetition half; the content-quality half is gopher_rules above)
 # ---------------------------------------------------------------------------
 
-def _ngrams_expr(words: Column, n: int) -> Column:
-    """All word n-grams (overlapping, WITH multiplicity) joined by a
-    single space — array<string>; empty when the doc has < n words."""
-    if n == 1:
-        return words
-    return F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def _dup_fold_expr(arr: Column) -> Column:
-    """One aggregate fold over ``array_sort(arr)`` → struct(
-    dup_units, dup_chars, top_count, top_chars): how many elements
-    (and their total characters) belong to a value occurring ≥ 2
-    times, plus the most-frequent value's count and count·length
-    (ties on count broken by larger count·length — deterministic and
-    mirrored verbatim by the SQL oracle's ``max(c*l) WHERE c = max_c``).
-
-    Array-local: zero shuffle, runs inside the scan stage. Elements
-    must be non-empty strings (callers filter), so the '' init
-    sentinel never collides.
-    """
-    zero = F.lit(0).cast("long")
-    init = F.struct(
-        F.lit("").alias("prev"),
-        zero.alias("run"),
-        zero.alias("du"),
-        zero.alias("dc"),
-        zero.alias("bc"),
-        zero.alias("bch"),
-    )
-
-    def step(acc, e):
-        same = e == acc["prev"]
-        run = F.when(same, acc["run"] + 1).otherwise(F.lit(1).cast("long"))
-        le = F.length(e).cast("long")
-        # run hits 2 → the FIRST occurrence retroactively counts too
-        du = acc["du"] + F.when(same & (run == 2), 2).when(same, 1).otherwise(0).cast("long")
-        dc = acc["dc"] + (F.when(same & (run == 2), 2 * le).when(same, le).otherwise(zero))
-        cch = run * le
-        # top tracking counts REPEATED values only (run >= 2): a
-        # singleton "most frequent n-gram" is every short doc's longest
-        # n-gram, which would fail the threshold vacuously — the public
-        # DataTrove GopherRepetitionFilter applies the same count>1 gate
-        bc = F.when(run >= 2, F.greatest(acc["bc"], run)).otherwise(acc["bc"])
-        bch = (
-            F.when((run >= 2) & (run > acc["bc"]), cch)
-            .when((run >= 2) & (run == acc["bc"]) & (cch > acc["bch"]), cch)
-            .otherwise(acc["bch"])
-        )
-        return F.struct(
-            e.alias("prev"), run.alias("run"), du.alias("du"),
-            dc.alias("dc"), bc.alias("bc"), bch.alias("bch"),
-        )
-
-    acc = F.aggregate(F.array_sort(arr), init, step)
-    return F.struct(
-        acc["du"].alias("dup_units"),
-        acc["dc"].alias("dup_chars"),
-        acc["bc"].alias("top_count"),
-        acc["bch"].alias("top_chars"),
-    )
-
-
 # Gopher Table A1 thresholds (public values)
 GOPHER_REP_THRESHOLDS = {
     "dup_line_frac": 0.30,
@@ -1055,150 +974,9 @@ def _rep_col_names(top_ns, dup_ns) -> list[str]:
 
 
 # Java \s == [ \t\n\x0B\f\r]; Python re.ASCII \s is the identical set
-# (\x0B is \v) — the Arrow kernel must split exactly like F.split
+# (\x0B is \v) — the kernel splits words exactly like Spark's F.split
 _WS_RE = None
 _PARA_RE = None
-
-
-def _rep_stats_py(text: str, top_ns, dup_ns) -> dict:
-    """Pure-Python twin of the Catalyst fold: IDENTICAL integer counts
-    and the same float divisions, so both engines (and the SQL oracle)
-    agree bit-for-bit."""
-    import re
-    from collections import Counter
-
-    global _WS_RE, _PARA_RE
-    if _WS_RE is None:
-        _WS_RE = re.compile(r"\s+", re.ASCII)
-        _PARA_RE = re.compile(r"\n{2,}")
-    out = {}
-    tlen = max(len(text), 1)
-    for name, parts in (
-        ("line", text.split("\n")),
-        ("para", _PARA_RE.split(text)),
-    ):
-        units = [u for u in (x.strip(" ") for x in parts) if u]
-        cnt = Counter(units)
-        du = dc = 0
-        for u, c in cnt.items():
-            if c > 1:
-                du += c
-                dc += c * len(u)
-        out[f"dup_{name}_frac"] = du / max(len(units), 1)
-        out[f"dup_{name}_char_frac"] = dc / max(sum(len(u) for u in units), 1)
-    words = _WS_RE.split(text)
-    words = [w for w in words if w]
-    # n-grams counted as TUPLES of interned word ids, not joined
-    # strings: join-with-space is injective over whitespace-free words,
-    # so id-tuple equality IS joined-string equality (exact — no
-    # hashing), and the joined form's length is a prefix-sum lookup
-    # (Σ word lens + n − 1). Docs of ≥100 words take a vectorized twin
-    # of the same count (`_ngram_stats_np`, incremental rank doubling)
-    # — still EXACT id-tuple equality (no hashing, no collisions),
-    # same integer counts, same divisions. The dict loop allocates
-    # ~9·len(words) tuples per doc and was the allocation bound the
-    # 10^3-10^4x decades hit (12.1×/decade); the numpy twin sorts
-    # int64 keys in C instead.
-    if words:
-        intern: dict = {}
-        ids = tuple(intern.setdefault(w, len(intern)) for w in words)
-        cs = [0]
-        for w in words:
-            cs.append(cs[-1] + len(w))
-        # crossover measured at ~100 words (numpy fixed cost: 9
-        # np.unique calls); below it the dict loop wins
-        use_np = len(words) >= 100 and min({*top_ns, *dup_ns}) >= 2
-        if use_np:
-            import numpy as np
-
-            _ngram_stats_np(
-                np,
-                np.asarray(ids, dtype=np.int64),
-                np.asarray(cs, dtype=np.int64),
-                set(top_ns),
-                set(dup_ns),
-                tlen,
-                out,
-            )
-            return out
-    for n in {*top_ns, *dup_ns}:
-        cnt: dict = {}
-        if words and len(words) >= n:
-            get = cnt.get
-            for i in range(len(words) - n + 1):
-                g = ids[i : i + n]
-                e = get(g)
-                if e is None:
-                    cnt[g] = [1, cs[i + n] - cs[i] + n - 1]
-                else:
-                    e[0] += 1
-        if n in top_ns:
-            best = (0, 0)
-            for c, gl in cnt.values():
-                if c > 1:
-                    key = (c, c * gl)
-                    if key > best:
-                        best = key
-            out[f"top_{n}gram_char_frac"] = min(best[1] / tlen, 1.0)
-        if n in dup_ns:
-            dc = 0
-            for c, gl in cnt.values():
-                if c > 1:
-                    dc += c * gl
-            out[f"dup_{n}gram_char_frac"] = min(dc / tlen, 1.0)
-    return out
-
-
-def _ngram_stats_np(np, ids_arr, cs_arr, top_ns, dup_ns, tlen, out) -> None:
-    """Exact n-gram duplicate stats for ALL families, vectorized by
-    incremental rank doubling (the suffix-array trick, one step at a
-    time): dense ranks over (n−1)-grams plus the next word id identify
-    n-grams exactly, so each family costs ONE ``np.unique`` over an
-    int64 key ``(prev_rank << 32) | next_id`` — the numpy fast-path
-    sort, no hashing, no collisions (ranks < m < 2³¹, ids < m).
-    Identical integer counts to the dict loop: rank equality ⇔
-    id-tuple equality ⇔ joined-string equality. Per family, ``top`` =
-    lexicographic (c, c·gl) max over c>1 grams (the dict path's
-    ``best``), ``dc`` = Σ c·gl; a gram's joined length gl is
-    position-independent, read off the char prefix sums at the first
-    occurrence. Fills ``out`` in place, zero for families longer than
-    the doc.
-    """
-    m = ids_arr.shape[0]
-    families = top_ns | dup_ns
-    max_n = max(families)
-    rank = ids_arr
-
-    def emit(n, top, dc):
-        if n in top_ns:
-            out[f"top_{n}gram_char_frac"] = min(top / tlen, 1.0)
-        if n in dup_ns:
-            out[f"dup_{n}gram_char_frac"] = min(dc / tlen, 1.0)
-
-    for n in range(2, max_n + 1):
-        k = m - n + 1
-        if k <= 0:
-            for nn in range(n, max_n + 1):
-                emit(nn, 0, 0)
-            return
-        key = (rank[:k] << 32) | ids_arr[n - 1 : n - 1 + k]
-        _, first, inv, cnts = np.unique(
-            key, return_index=True, return_inverse=True, return_counts=True
-        )
-        rank = inv
-        if n in families:
-            dup = cnts > 1
-            if dup.any():
-                c_d = cnts[dup]
-                idx = first[dup]
-                gl = cs_arr[idx + n] - cs_arr[idx] + (n - 1)
-                cg = c_d * gl
-                dc = int(cg.sum())
-                cmax = c_d.max()
-                top = int(cg[c_d == cmax].max())
-            else:
-                top = dc = 0
-            emit(n, top, dc)
 
 
 def repetition_signals(
@@ -1207,7 +985,6 @@ def repetition_signals(
     top_ns: Sequence[int] = (2, 3, 4),
     dup_ns: Sequence[int] = (5, 6, 7, 8, 9, 10),
     thresholds: dict | None = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Gopher repetition-quality signals (Rae et al. 2021 §A1.1 Table
     A1, the half ``gopher_rules`` doesn't cover): duplicated line /
@@ -1225,101 +1002,62 @@ def repetition_signals(
     per occurrence (overlaps may exceed the doc length — capped at 1.0);
     denominators: unit fractions over the unit count, line/para char
     fractions over the units' total characters, n-gram fractions over
-    ``length(text)``.
+    ``length(text)``. NULL text counts as empty.
 
-    ``engine='arrow'`` (default): one Arrow-batched ``mapInPandas``
-    pass hash-counting all 9 n-gram families per doc in Python — the
-    counts are integers, the divisions identical, so the result is
-    bit-equal to the Catalyst path (unit-tested). ``engine='catalyst'``
-    keeps the pure-HOF formulation: measured 10× slower at the 100×
-    decade (154 s vs 14.6 s over 500k docs — an aggregate fold with a
-    six-field struct accumulator per array element is interpreted,
-    never codegen'd), retained for Arrow-less deployments.
-
-    Scale shape either way: map-only, zero shuffles — a scan-side
+    One Arrow-batched ``mapInPandas`` pass counts every n-gram family
+    per batch (``_rep_stats_batch``): integer counts and plain float
+    divisions, bit-equal to the per-document dict reference in
+    ``tests/kernel_refs.py``. Map-only, zero shuffles — a scan-side
     filter at 100 TB exactly like ``gopher_rules``.
     """
     th = {**GOPHER_REP_THRESHOLDS, **(thresholds or {})}
-    if engine == "arrow":
-        return _repetition_signals_arrow(frame, text_col, tuple(top_ns), tuple(dup_ns), th)
-    # NULL text ≡ empty (both engines agree; the Arrow kernel maps None -> "")
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    tlen = F.greatest(F.length(t), F.lit(1)).cast("double")
+    top_ns, dup_ns = tuple(top_ns), tuple(dup_ns)
+    names = _rep_col_names(top_ns, dup_ns)
+    schema = ", ".join(
+        f"{qi(f.name)} {f.dataType.simpleString()}" for f in frame.spark.schema.fields
+    ) + ", " + ", ".join(f"{qi(n)} double" for n in names) + ", `repetition_keep` boolean"
 
-    def units(pattern):
-        return F.filter(
-            F.transform(F.split(t, pattern), lambda x: F.trim(x)),
-            lambda x: x != "",
-        )
+    def fn(batches):
+        import numpy as np
 
-    words = F.filter(F.split(t, r"\s+"), lambda w: w != "")
+        for pdf in batches:
+            stats = _rep_stats_batch(list(pdf[text_col]), top_ns, dup_ns)
+            keep = np.ones(len(pdf), dtype=bool)
+            for nm in ("line", "para"):
+                keep &= stats[f"dup_{nm}_frac"] <= th[f"dup_{nm}_frac"]
+                keep &= stats[f"dup_{nm}_char_frac"] <= th[f"dup_{nm}_char_frac"]
+            for n in top_ns:
+                keep &= stats[f"top_{n}gram_char_frac"] <= th["top_ngram_char_frac"][n]
+            for n in dup_ns:
+                keep &= stats[f"dup_{n}gram_char_frac"] <= th["dup_ngram_char_frac"][n]
+            for nm in names:
+                pdf[nm] = stats[nm]
+            pdf["repetition_keep"] = keep
+            yield pdf
 
-    cols = []
-    keeps = []
-    for name, pat in (("line", r"\n"), ("para", r"\n{2,}")):
-        u = units(pat)
-        s = _dup_fold_expr(u)
-        n_units = F.greatest(F.size(u), F.lit(1)).cast("double")
-        u_chars = F.greatest(
-            F.aggregate(u, F.lit(0).cast("long"), lambda a, e: a + F.length(e)),
-            F.lit(1),
-        ).cast("double")
-        uf = (s["dup_units"] / n_units).alias(f"dup_{name}_frac")
-        cf = (s["dup_chars"] / u_chars).alias(f"dup_{name}_char_frac")
-        cols += [uf, cf]
-        keeps += [
-            s["dup_units"] / n_units <= th[f"dup_{name}_frac"],
-            s["dup_chars"] / u_chars <= th[f"dup_{name}_char_frac"],
-        ]
-    for n in top_ns:
-        s = _dup_fold_expr(_ngrams_expr(words, n))
-        frac = F.least(s["top_chars"] / tlen, F.lit(1.0))
-        cols.append(frac.alias(f"top_{n}gram_char_frac"))
-        keeps.append(frac <= th["top_ngram_char_frac"][n])
-    for n in dup_ns:
-        s = _dup_fold_expr(_ngrams_expr(words, n))
-        frac = F.least(s["dup_chars"] / tlen, F.lit(1.0))
-        cols.append(frac.alias(f"dup_{n}gram_char_frac"))
-        keeps.append(frac <= th["dup_ngram_char_frac"][n])
-
-    keep = keeps[0]
-    for k in keeps[1:]:
-        keep = keep & k
-    out = frame.spark.select("*", *cols, keep.alias("repetition_keep"))
-    return DataFrame(out)
-
-
-def _rep_keep(stats: dict, top_ns, dup_ns, th) -> bool:
-    ok = (
-        stats["dup_line_frac"] <= th["dup_line_frac"]
-        and stats["dup_line_char_frac"] <= th["dup_line_char_frac"]
-        and stats["dup_para_frac"] <= th["dup_para_frac"]
-        and stats["dup_para_char_frac"] <= th["dup_para_char_frac"]
-    )
-    for n in top_ns:
-        ok = ok and stats[f"top_{n}gram_char_frac"] <= th["top_ngram_char_frac"][n]
-    for n in dup_ns:
-        ok = ok and stats[f"dup_{n}gram_char_frac"] <= th["dup_ngram_char_frac"][n]
-    return ok
+    return DataFrame(spread(frame.spark).mapInPandas(fn, schema))
 
 
 def _rep_stats_batch(texts, top_ns, dup_ns) -> dict:
-    """Batch twin of ``_rep_stats_py`` over a whole Arrow batch —
-    identical integer counts and the same float divisions, computed
-    for ALL documents at once. Each n-gram family costs ONE
-    ``np.unique`` over an int64 key for the ENTIRE batch (incremental
-    rank doubling, as in ``_ngram_stats_np``): the 1-gram ranks fold
+    """The repetition kernel over a whole Arrow batch: every document's
+    signals at once, as integer counts and plain float divisions. Each
+    n-gram family costs ONE ``np.unique`` over an int64 key for the
+    ENTIRE batch, by incremental rank doubling (the suffix-array trick,
+    one step at a time): dense ranks over (n−1)-grams plus the next
+    word id identify n-grams exactly — no hashing, no collisions (ranks
+    and ids < 2³¹). The chain starts at the 1-grams, whose ranks fold
     the document index in (``(doc_idx << 32) | word_id``), so windows
     never collide across documents, and windows that would span a
     document boundary are masked out by the block-contiguity of
     ``doc_idx`` before each unique (validity is monotone in n — a
     valid (n+1)-window implies its n-prefix was valid, so stale rank
-    slots at invalid positions are never read). This amortizes the
-    per-document Python overhead that dominates short-document corpora
-    (the decade benches run ~54-word docs, far below the ≥100-word
-    per-doc numpy gate): measured ~3× over the per-doc dict loop at
-    that shape. Per-document line/paragraph stats and the whitespace
-    split stay as a cheap Python loop (a handful of units per doc).
+    slots at invalid positions are never read). Rank equality ⇔
+    word-tuple equality ⇔ joined-string equality, so the counts are
+    exactly the per-document dict loop's (``tests/kernel_refs.py``),
+    without its per-document Python overhead: measured ~3× faster on
+    ~54-word documents. Per-document line/paragraph stats and the
+    whitespace split stay as a cheap Python loop (a handful of units
+    per doc).
 
     Arrow batches (64k docs ≈ 3.5M words) are processed in ~2k-doc
     sub-chunks: the 9 per-family sorts over a full batch are
@@ -1382,42 +1120,28 @@ def _rep_stats_batch(texts, top_ns, dup_ns) -> dict:
         wlens.extend(map(len, words))
     N = len(gids)
     families = {*top_ns, *dup_ns}
-    if N == 0 or not families or min(families) < 2:
-        # no words anywhere, or a family the incremental chain can't
-        # start from — fall back to the exact per-doc path
-        if N and families:
-            for d, text in enumerate(texts):
-                st = _rep_stats_py(
-                    text if isinstance(text, str) else "", top_ns, dup_ns
-                )
-                for n in families:
-                    for pref in ("top", "dup"):
-                        nm = f"{pref}_{n}gram_char_frac"
-                        if nm in out:
-                            out[nm][d] = st[nm]
+    if N == 0 or not families:
         return out
     gid = np.asarray(gids, dtype=np.int64)
     wl = np.asarray(wlens, dtype=np.int64)
     WL = np.concatenate(([0], np.cumsum(wl)))
     doc_idx = np.repeat(np.arange(ndocs, dtype=np.int64), word_counts)
-    max_n = max(families)
-    _, rank = np.unique((doc_idx << 32) | gid, return_inverse=True)
-    rank = rank.astype(np.int64)
-    for n in range(2, max_n + 1):
-        k = N - n + 1
-        if k <= 0:
-            break
-        valid = doc_idx[:k] == doc_idx[n - 1 :]
-        vpos = np.nonzero(valid)[0]
-        if vpos.size == 0:
-            break
-        vk = (rank[vpos] << 32) | gid[vpos + n - 1]
+    key = (doc_idx << 32) | gid
+    vpos = np.arange(N)
+    for n in range(1, max(families) + 1):
+        if n > 1:
+            k = N - n + 1
+            if k <= 0:
+                break
+            vpos = np.nonzero(doc_idx[:k] == doc_idx[n - 1 :])[0]
+            if vpos.size == 0:
+                break
+            key = (rank[vpos] << 32) | gid[vpos + n - 1]
         _, first_c, inv_c, cnts = np.unique(
-            vk, return_index=True, return_inverse=True, return_counts=True
+            key, return_index=True, return_inverse=True, return_counts=True
         )
-        new_rank = np.zeros(k, dtype=np.int64)
-        new_rank[vpos] = inv_c
-        rank = new_rank
+        rank = np.zeros(N - n + 1, dtype=np.int64)
+        rank[vpos] = inv_c
         if n in families:
             dup = cnts > 1
             if dup.any():
@@ -1438,35 +1162,6 @@ def _rep_stats_batch(texts, top_ns, dup_ns) -> dict:
                     top_doc[od[last]] = cg[order[last]]
                     out[f"top_{n}gram_char_frac"] = np.minimum(top_doc / tlen, 1.0)
     return out
-
-
-def _repetition_signals_arrow(
-    frame: DataFrame, text_col: str, top_ns, dup_ns, th
-) -> DataFrame:
-    names = _rep_col_names(top_ns, dup_ns)
-    schema = ", ".join(
-        f"{qi(f.name)} {f.dataType.simpleString()}" for f in frame.spark.schema.fields
-    ) + ", " + ", ".join(f"{qi(n)} double" for n in names) + ", `repetition_keep` boolean"
-
-    def fn(batches):
-        import numpy as np
-
-        for pdf in batches:
-            stats = _rep_stats_batch(list(pdf[text_col]), top_ns, dup_ns)
-            keep = np.ones(len(pdf), dtype=bool)
-            for nm in ("line", "para"):
-                keep &= stats[f"dup_{nm}_frac"] <= th[f"dup_{nm}_frac"]
-                keep &= stats[f"dup_{nm}_char_frac"] <= th[f"dup_{nm}_char_frac"]
-            for n in top_ns:
-                keep &= stats[f"top_{n}gram_char_frac"] <= th["top_ngram_char_frac"][n]
-            for n in dup_ns:
-                keep &= stats[f"dup_{n}gram_char_frac"] <= th["dup_ngram_char_frac"][n]
-            for nm in names:
-                pdf[nm] = stats[nm]
-            pdf["repetition_keep"] = keep
-            yield pdf
-
-    return DataFrame(spread(frame.spark).mapInPandas(fn, schema))
 
 
 def repetition_filter(frame: DataFrame, text_col: str = "text", **kwargs) -> DataFrame:

@@ -1107,12 +1107,16 @@ def test_ewm_alias_overwrites_existing_column(spark):
 
 
 def test_repetition_engines_agree(spark):
-    """Arrow kernel vs Catalyst fold: identical integer counts, same
-    divisions — bit-equal output on the adversarial hand rows AND the
-    real sf0.001 corpus."""
+    """The batch kernel vs the per-document dict reference in
+    tests/kernel_refs.py: identical integer counts, same divisions —
+    bit-equal output on the adversarial hand rows and the real sf0.001
+    corpus. Also covers a 1-gram family (the rank-doubling chain starts
+    there), a batch with no words at all, and a batch past the kernel's
+    4096-doc sub-chunk split."""
     from pandas_spark import read_parquet
     from pandas_spark.frame import DataFrame
     from pandas_spark.operators import text
+    from .kernel_refs import rep_signals_ref, rep_stats_ref
 
     rows = [
         (1, "hello world\nhello world\nunique line\n\nhello world"),
@@ -1123,21 +1127,36 @@ def test_repetition_engines_agree(spark):
         (6, "one two three one two three one two three four"),
     ]
     sdf = spark.createDataFrame(rows, "doc_id long, text string")
-    for frame in (
-        DataFrame(sdf),
-        read_parquet(spark, "/root/testdata/sf0.001/documents.parquet"),
-    ):
-        a = text.repetition_signals(frame, engine="arrow").spark.collect()
-        c = text.repetition_signals(frame, engine="catalyst").spark.collect()
-        ka = sorted([tuple(r) for r in a], key=repr)
-        kc = sorted([tuple(r) for r in c], key=repr)
-        assert ka == kc
+    corpus = read_parquet(spark, "/root/testdata/sf0.001/documents.parquet")
+    unigram = dict(
+        top_ns=(1, 2, 3, 4),
+        thresholds={"top_ngram_char_frac": {1: 0.30, 2: 0.20, 3: 0.18, 4: 0.16}},
+    )
+    for frame, kw in ((DataFrame(sdf), {}), (corpus, {}), (DataFrame(sdf), unigram)):
+        got = text.repetition_signals(frame, **kw).spark.collect()
+        assert len(got) == frame.spark.count()
+        for r in got:
+            want = rep_signals_ref(r["text"], **kw)
+            assert {c: r[c] for c in want} == want, r["text"]
+
+    top_ns, dup_ns = (1, 2, 3, 4), (5, 6, 7, 8, 9, 10)
+    texts = [t for _, t in rows] + [r["text"] for r in corpus.spark.collect()]
+    big = [f"{t} {i % 13}" if t else t for i, t in enumerate(texts * (4100 // len(texts) + 1))]
+    assert len(big) > 4096
+    for batch in (["", None, " \t ", "\n\n", None], big):
+        stats = text._rep_stats_batch(batch, top_ns, dup_ns)
+        for d, t in enumerate(batch):
+            want = rep_stats_ref(t, top_ns, dup_ns)
+            assert {c: float(stats[c][d]) for c in want} == want, t
 
 
 def test_pq_encode_engines_bit_identical(spark):
+    """The mapInArrow encoder vs the Catalyst argmin fold reference in
+    tests/kernel_refs.py: bit-identical codes."""
     from pandas_spark.frame import DataFrame
     from pandas_spark.operators import similarity as sim
     from pyspark.sql import functions as F
+    from .kernel_refs import pq_code_expr
 
     emb = DataFrame(
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
@@ -1145,9 +1164,10 @@ def test_pq_encode_engines_bit_identical(spark):
         )
     )
     cb = sim.pq_train(emb, m=8, ksub=8, sample_n=512, iters=4, seed=3)
-    a = {r["vec_id"]: list(r["pq_code"]) for r in sim.pq_encode(emb, cb, engine="arrow").spark.collect()}
-    c = {r["vec_id"]: list(r["pq_code"]) for r in sim.pq_encode(emb, cb, engine="catalyst").spark.collect()}
-    assert a == c
+    a = {r["vec_id"]: list(r["pq_code"]) for r in sim.pq_encode(emb, cb).spark.collect()}
+    ref = emb.spark.select("vec_id", pq_code_expr(cb, F.col("embedding")).alias("pq_code"))
+    c = {r["vec_id"]: list(r["pq_code"]) for r in ref.collect()}
+    assert len(a) > 0 and a == c
 
 
 def test_ewm_empty_frame(spark):
@@ -1163,11 +1183,13 @@ def test_ewm_empty_frame(spark):
 
 
 def test_pq_topk_arrow_matches_catalyst(spark):
-    """ADC Arrow partial-top-k vs the JVM LUT fold: identical results
-    (same in-order distance sums, same (dist, id) tie rule)."""
+    """ADC Arrow partial-top-k vs the Catalyst LUT-fold reference in
+    tests/kernel_refs.py: identical results (same in-order distance
+    sums, same (dist, id) tie rule)."""
     from pandas_spark.frame import DataFrame
     from pandas_spark.operators import similarity as sim
     from pyspark.sql import functions as F
+    from .kernel_refs import pq_topk_catalyst
 
     emb = DataFrame(
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
@@ -1181,13 +1203,9 @@ def test_pq_topk_arrow_matches_catalyst(spark):
     )
     cb = sim.pq_train(emb, m=8, ksub=8, sample_n=512, iters=4, seed=3)
     enc = sim.pq_encode(emb, cb)
-    a = sorted(
-        tuple(r) for r in sim.pq_topk(enc, qs, cb, k=7, method="arrow").spark.collect()
-    )
-    c = sorted(
-        tuple(r) for r in sim.pq_topk(enc, qs, cb, k=7, method="catalyst").spark.collect()
-    )
-    assert a == c
+    a = sorted(tuple(r) for r in sim.pq_topk(enc, qs, cb, k=7).spark.collect())
+    c = sorted(tuple(r) for r in pq_topk_catalyst(enc.spark, qs.spark, cb, k=7).collect())
+    assert a and a == c
 
 
 def test_groupby_rolling_expanding_accessors(spark):

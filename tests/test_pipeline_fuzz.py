@@ -154,16 +154,27 @@ def test_cluster_labels_match_union_find(spark, rows):
 @settings(**FUZZ_SETTINGS)
 @given(rows=corpus())
 def test_repetition_signals_bounded_and_engines_agree(spark, rows):
+    """The batch kernel bit-agrees with the per-document dict reference
+    (tests/kernel_refs.py): through the operator at the default
+    families, and called directly with a 1-gram family added."""
+    from .kernel_refs import rep_signals_ref, rep_stats_ref
+
     f = _frame(spark, rows)
-    a = tx.repetition_signals(f, engine="arrow").to_pandas().sort_values("doc_id")
-    c = tx.repetition_signals(f, engine="catalyst").to_pandas().sort_values("doc_id")
+    a = tx.repetition_signals(f).to_pandas().sort_values("doc_id")
     frac_cols = [x for x in a.columns if "frac" in x]
     assert frac_cols
     for col_ in frac_cols:
         assert ((a[col_] >= -1e-12) & (a[col_] <= 1.0 + 1e-12)).all(), col_
-        # engines bit-agree
-        assert a[col_].values.tolist() == c[col_].values.tolist(), col_
     assert a["repetition_keep"].isin([True, False]).all()
+    for r in a.to_dict("records"):
+        want = rep_signals_ref(r["text"])
+        assert {c: r[c] for c in want} == want, r["text"]
+    texts = [t for _, t in rows]
+    top_ns, dup_ns = (1, 2, 3, 4), (5, 6, 7, 8, 9, 10)
+    stats = tx._rep_stats_batch(texts, top_ns, dup_ns)
+    for d, t in enumerate(texts):
+        want = rep_stats_ref(t, top_ns, dup_ns)
+        assert {c: float(stats[c][d]) for c in want} == want, t
 
 
 @settings(**FUZZ_SETTINGS)

@@ -164,9 +164,9 @@ def test_dedup_recomputes_every_invocation(spark):
     def build():
         return dedup.minhash_dedup_pairs(docs, "text", "doc_id", threshold=0.8).to_spark()
 
-    def buffers_loaded(sdf):
+    def buffers_loaded(jdf):
         cm = spark._jsparkSession.sharedState().cacheManager()
-        opt = cm.lookupCachedData(sdf._jdf)
+        opt = cm.lookupCachedData(jdf)
         if opt.isEmpty():
             return None
         cd = opt.get().cachedRepresentation().cacheBuilder()
@@ -175,12 +175,17 @@ def test_dedup_recomputes_every_invocation(spark):
     # diff by VALUE identity, not key presence: an earlier test in the
     # same session may have registered the same semantic key, which
     # _cache_once pops and re-inserts under the same key
-    before = {k: id(v) for k, v in dedup._CACHE_REGISTRY.items()}
+    def registered():
+        return {
+            (id(session), k): jdf
+            for session, entries in dedup._CACHE_REGISTRY.items()
+            for k, jdf in entries.items()
+        }
+
+    before = {k: id(v) for k, v in registered().items()}
     out1 = build()
     out1.write.format("noop").mode("overwrite").save()
-    new_entries = [
-        v for k, v in dedup._CACHE_REGISTRY.items() if before.get(k) != id(v)
-    ]
+    new_entries = [v for k, v in registered().items() if before.get(k) != id(v)]
     assert new_entries, "dedup build must register its cached base"
     first = new_entries[0]
     assert buffers_loaded(first) is True, "run 1 must materialize its own base"
@@ -192,3 +197,82 @@ def test_dedup_recomputes_every_invocation(spark):
     )
     # and run 2 still computes the same answer from the inputs
     assert out2.count() == out1.count()
+
+
+def test_cache_once_registry_is_per_live_session(spark):
+    """_cache_once keys its registry on a weak reference to the session.
+    A discarded session's entries are unpersisted and released with it,
+    and a new session starts from an empty registry, so it can never
+    pop or match a dead session's entry (an id() key could be reused by
+    the next session allocated at the same address)."""
+    import gc
+    import weakref
+
+    from pandas_spark.operators import dedup
+
+    def cache_in(session):
+        c = dedup._cache_once(session.range(64).selectExpr("id", "id % 7 AS g"))
+        assert c.count() == 64
+        return c._jdf
+
+    n_sessions = len(dedup._CACHE_REGISTRY)
+    old = spark.newSession()
+    old_ref = weakref.ref(old)
+    old_jdf = cache_in(old)
+    old_entries = dedup._CACHE_REGISTRY[old]
+    assert len(old_entries) == 1 and len(dedup._CACHE_REGISTRY) == n_sessions + 1
+    assert old_jdf.storageLevel().useMemory()
+    del old
+    # pyspark's RDD.toDF hook holds the most recently created session;
+    # creating the next one drops the last strong reference to `old`
+    new = spark.newSession()
+    gc.collect()
+    assert old_ref() is None, "the registry must not keep a discarded session alive"
+    assert not old_entries and len(dedup._CACHE_REGISTRY) <= n_sessions, (
+        "a discarded session's entries must leave the registry"
+    )
+    assert not old_jdf.storageLevel().useMemory(), (
+        "a discarded session's cached plans must be unpersisted"
+    )
+    assert new not in dedup._CACHE_REGISTRY
+    cache_in(new)
+    assert len(dedup._CACHE_REGISTRY[new]) == 1
+
+
+# Every SPARK_GRAFT_* name the engine reads, listed on purpose: a new
+# knob or a revived kill switch fails the test below until it is added
+# here. The count is the tuning surface a gate registry should shrink.
+ENGINE_ENV_KNOBS = {
+    "SPARK_GRAFT_ARROW_PART_BYTES",
+    "SPARK_GRAFT_ARROW_PART_ROWS",
+    "SPARK_GRAFT_BCAST_VERIFY_ROWS",
+    "SPARK_GRAFT_CACHE_MAX_BYTES",
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_DRIVER_MEM",
+    "SPARK_GRAFT_LARGE_INIT_PART_BYTES",
+    "SPARK_GRAFT_LARGE_INIT_PART_CAP",
+    "SPARK_GRAFT_LOCAL_REL_ROWS",
+    "SPARK_GRAFT_MAX_RESULT",
+    "SPARK_GRAFT_PLAN_MEMO",
+    "SPARK_GRAFT_POOL_PART_ROWS",
+    "SPARK_GRAFT_PROFILE",
+    "SPARK_GRAFT_PY_PART_ROWS",
+    "SPARK_GRAFT_SHUFFLE_PARTITIONS",
+    "SPARK_GRAFT_SMALL_PLAN_BYTES",
+}
+
+
+def test_engine_env_knob_surface_is_pinned():
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "pandas_spark"
+    )
+    found = set()
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            if name.endswith(".py"):
+                with open(os.path.join(dirpath, name), encoding="utf-8") as fh:
+                    found |= set(re.findall(r"SPARK_GRAFT_[A-Z0-9_]+", fh.read()))
+    assert found == ENGINE_ENV_KNOBS, (
+        f"unlisted: {sorted(found - ENGINE_ENV_KNOBS)}, "
+        f"gone: {sorted(ENGINE_ENV_KNOBS - found)}"
+    )
